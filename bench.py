@@ -17,6 +17,7 @@ import time
 
 from mediawiki_to_notion_spark.operators import QUERIES, load_all
 from mediawiki_to_notion_spark.session import get_spark
+from tools.measure import wait_idle
 
 HEADLINE = [
     "agg_pricing_summary",
@@ -72,8 +73,7 @@ HEADLINE = [
     "source_overlap_matrix",
     "market_basket_part_pairs",
     "user_retention_cohorts",
-    # --- r4 additions (cross-round totals compare on value_r3_subset,
-    # the 53-query set above, exactly as value_r1_subset pins the r1 set)
+    # --- r4 additions
     "sliding_distinct_users_hll",
     "text_gopher_quality_rules",
     "corpus_mixture_weights",
@@ -143,8 +143,7 @@ HEADLINE = [
     "dedup_embedding_cosine_lsh_multitable",
     "chunk_documents_overlap",
     "decontaminate_fuzzy_minhash",
-    # late-r7 wave 2 (beyond the N_R7_SET marker: cross-round subset
-    # totals stay comparable)
+    # late-r7 wave 2
     "dedup_winnowing_fingerprint",
     "training_length_bucket_batching",
     "text_zipf_fit",
@@ -174,51 +173,14 @@ HEADLINE = [
     "pca_power_certificate",
     "dedup_fuzzy_levenshtein_exhaustive",
 ]
-N_R3_SET = 53  # the first 53 entries are the r2/r3 headline set
-N_R4_SET = 61  # ... the first 61 are the r4 headline set
-N_R5_SET = 81  # ... the first 81 are the r5 headline set
-N_R6_SET = 97  # ... the first 97 are the r6 headline set (with the r7
-# fixedwidth_demo renames occupying the retired _wide/_scaled slots;
-# cost-comparable modulo the r7 primary/demo name<->code swap)
-N_R7_SET = 102  # ... the first 102 are the r7 headline set
-
 
 def main() -> None:
     load_all()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    # Sample load BEFORE the session spins up: a non-idle box straggles
-    # the 32-thread stages and fabricates 1.2-1.35x phantom regressions
-    # (two rounds of forensics — VERDICT r5 item 7).  r8 (VERDICT r7
-    # "What's wrong" #1): don't EMIT a load-warned artifact — wait for
-    # the box to go idle first (1-min load decays in minutes once the
-    # contending process exits; budget below covers >10 decay
-    # half-lives), so the warn path survives only as a last resort.
-    # r9 (VERDICT r8 brief #1): the r8 capture started at load 3.14 vs
-    # the 0.1*cpus=3.2 warn line — "passed by a hair" and a dozen
-    # unchanged queries looked 1.3-1.8x slower.  The gate now blocks
-    # until 1-min load < 1.0 ABSOLUTE (not a cores fraction; stragglers
-    # come from ANY competing runnable thread on the timed 32-thread
-    # stages), with a budget long enough for >20 decay half-lives.
-    idle_gate_load = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD",
-                                          "1.0"))
-    idle_budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT",
-                                         "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    # Explicit timeout marker (ADVICE r8): a waited_s == budget run that
-    # proceeded on a still-busy box must be distinguishable from one
-    # that went idle on the last poll.  Derived from the FINAL in-loop
-    # observation (ADVICE r9): re-sampling after the loop could label a
-    # budget-exhausted run not-timed-out if load dipped between the last
-    # poll and the recheck.
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
+    # idle gate BEFORE the session spins up (tools/measure.py)
+    gate = wait_idle()
     loadavg_start = list(os.getloadavg())
     # effective core count of this capture (r11, VERDICT r10 wart #5):
     # the driver ALSO benches at a lower $SPARK_GRAFT_CPUS, and the
@@ -268,19 +230,6 @@ def main() -> None:
         _gc.collect()
         spark.sparkContext._jvm.System.gc()
 
-    # the r1 headline set (31 queries): cross-round totals are only
-    # comparable on a fixed query set, so emit its subtotal alongside
-    # the full (growing) total
-    r1_set = set(HEADLINE[:31])
-    r3_set = set(HEADLINE[:N_R3_SET])
-    r4_set = set(HEADLINE[:N_R4_SET])
-    r5_set = set(HEADLINE[:N_R5_SET])
-    r6_set = set(HEADLINE[:N_R6_SET])
-    r7_set = set(HEADLINE[:N_R7_SET])
-
-    def _subtotal(t, names):
-        return round(sum(v for k, v in t.items() if k in names), 3)
-
     loadavg_end = list(os.getloadavg())
     n_cpus = os.cpu_count() or 1
     # anything already running when the bench started contends with the
@@ -297,21 +246,6 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "n_queries": len(timings),
-        "value_r1_subset": _subtotal(timings, r1_set),
-        "value_r3_subset": _subtotal(timings, r3_set),
-        "value_r4_subset": _subtotal(timings, r4_set),
-        "value_r5_subset": _subtotal(timings, r5_set),
-        "value_r6_subset": _subtotal(timings, r6_set),
-        "value_r7_subset": _subtotal(timings, r7_set),
-        # min-of-n subtotals: r4 proved median-of-5 drifts ~11% under
-        # driver-host load while min-of-5 reproduced r3 exactly —
-        # cross-round comparisons should quote these (VERDICT r4 #5)
-        "value_r1_subset_min": _subtotal(timings_min, r1_set),
-        "value_r3_subset_min": _subtotal(timings_min, r3_set),
-        "value_r4_subset_min": _subtotal(timings_min, r4_set),
-        "value_r5_subset_min": _subtotal(timings_min, r5_set),
-        "value_r6_subset_min": _subtotal(timings_min, r6_set),
-        "value_r7_subset_min": _subtotal(timings_min, r7_set),
         "value_min_total": round(sum(timings_min.values()), 3),
         "queries": timings,
         "queries_min": timings_min,
@@ -323,23 +257,11 @@ def main() -> None:
         "loadavg_start": [round(x, 2) for x in loadavg_start],
         "loadavg_end": [round(x, 2) for x in loadavg_end],
         "loadavg_warn": loadavg_warn,
-        # seconds the idle-gate waited before starting (r8): >0 means
-        # the box was busy and the bench deferred rather than emitting
-        # a load-warned artifact; timed_out=true means the budget ran
-        # out with load still above the gate (ADVICE r8) — such a
-        # capture is NOT gradeable even if loadavg_warn stayed false
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_load_threshold": idle_gate_load,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        # seconds the idle gate waited before starting; timed_out=true
+        # means the budget ran out with load still above the gate —
+        # such a capture is NOT gradeable even if loadavg_warn is false
+        **gate,
         "code_md5": code_md5,
-        # end-to-end 3-stage document-pipeline throughput (VERDICT r6
-        # brief #2), measured by tools/pipeline_bench.py (process-dump
-        # docs/s, ingest blocks/s, upload-drain blocks/s over the real
-        # HTTP transport, at sf0.1 AND the synthetic 10x with per-stage
-        # exponents).  Embedded from its own JSON because the full
-        # pipeline run (XML synth + HTTP server) is a separate harness;
-        # the file carries its own loadavg record.
-        "pipeline_throughput": _load_pipeline_bench(),
         # cross-round ratios are only interpretable on the same machine:
         # r1→r2 moved 1.40x on identical queries purely from a fresh VM
         # (SKILL.md gotcha) — fingerprint the box so the judge can tell
@@ -352,11 +274,7 @@ def main() -> None:
         # that used the same scheme (r1/r2: warmup + best-of-2 best;
         # r3+: warmup + median of n_runs, min reported alongside)
         "methodology": f"sf0.001 warmup, median of {n_runs} timed runs "
-                       "(min in queries_min), noop sink; value_rN_subset "
-                       "= median total over that round's fixed query set "
-                       "(r1=31, r3=53, r4=61, r5=81 queries), value_rN_subset_min "
-                       "= min-of-n total over the same set (the "
-                       "load-robust cross-round currency)",
+                       "(min in queries_min), noop sink",
     }
     # Same-code capture history (VERDICT r5 item 7): every run appends
     # its per-query mins keyed by (code, machine, data, sf) fingerprints
@@ -398,10 +316,6 @@ def main() -> None:
     detail["n_same_code_captures"] = len(captures)
     detail["queries_best_same_code"] = best
     detail["value_best_total"] = round(sum(best.values()), 3)
-    detail["value_r1_subset_best"] = _subtotal(best, r1_set)
-    detail["value_r3_subset_best"] = _subtotal(best, r3_set)
-    detail["value_r4_subset_best"] = _subtotal(best, r4_set)
-    detail["value_r5_subset_best"] = _subtotal(best, r5_set)
 
     # Emission contract (VERDICT r3 item 4: BENCH_r03 parsed:null — the
     # single fat JSON line outgrew the driver's tail-capture window):
@@ -429,22 +343,12 @@ def main() -> None:
         "value": detail["value"],
         "unit": "sec",
         "n_queries": detail["n_queries"],
-        "value_r1_subset": detail["value_r1_subset"],
-        "value_r3_subset": detail["value_r3_subset"],
-        "value_r4_subset": detail["value_r4_subset"],
-        "value_r5_subset": detail["value_r5_subset"],
-        "value_r1_subset_min": detail["value_r1_subset_min"],
-        "value_r3_subset_min": detail["value_r3_subset_min"],
-        "value_r4_subset_min": detail["value_r4_subset_min"],
-        "value_r5_subset_min": detail["value_r5_subset_min"],
         "value_min_total": detail["value_min_total"],
         "value_best_total": detail["value_best_total"],
-        "value_r4_subset_best": detail["value_r4_subset_best"],
-        "value_r5_subset_best": detail["value_r5_subset_best"],
         "n_same_code_captures": detail["n_same_code_captures"],
         "loadavg_start_1m": detail["loadavg_start"][0],
         "loadavg_warn": loadavg_warn,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        "idle_gate_timed_out": gate["idle_gate_timed_out"],
         "sf": sf,
         "cpus": cpus_effective,
         "machine_md5": machine_md5,
@@ -459,18 +363,6 @@ def main() -> None:
             f"(1m load {loadavg_start[0]:.1f} on {n_cpus} cpus); "
             "timings not gradeable — rerun idle")
     print(json.dumps(compact))
-
-
-def _load_pipeline_bench() -> dict | None:
-    """PIPELINE_BENCH.json (tools/pipeline_bench.py output), or None if
-    the pipeline bench hasn't been run on this checkout."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "PIPELINE_BENCH.json")
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
 
 
 def _code_fingerprint() -> str:

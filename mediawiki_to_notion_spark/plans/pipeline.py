@@ -116,19 +116,12 @@ def store_blocks(staged: DataFrame) -> tuple[DataFrame, DataFrame]:
     explicit batch_id column wins if present."""
     if "batch_id" not in staged.columns:
         staged = staged.withColumn("batch_id", F.md5("s3_object_key"))
-    if "s3_bucket" not in staged.columns:
-        staged = staged.withColumn("s3_bucket", F.lit("local"))
 
     blocks = (
         ensure_parallelism(staged.select("batch_id", "s3_object_key", "markdown"))
         .mapInPandas(markdown_to_block_rows, BLOCK_ROWS_DDL)
-    )
-    bucket = staged.select("batch_id", "s3_bucket").alias("m")
-    blocks = (
-        blocks.alias("b")
-        .join(F.broadcast(bucket), "batch_id")
-        .select("b.batch_id", "b.block_index", F.col("m.s3_bucket").alias("s3_bucket"),
-                "b.s3_object_key", "b.block_type", "b.block_json",
+        .select("batch_id", "block_index", F.lit("local").alias("s3_bucket"),
+                "s3_object_key", "block_type", "block_json",
                 F.lit(None).cast("timestamp").alias("uploaded_at"))
     )
     pages = staged.select(

@@ -84,35 +84,16 @@ def get_spark(app_name: str = "mediawiki_to_notion_spark",
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
     # AQE initial shuffle-partition count (shuffles start wide, AQE
-    # coalesces down).  A/B-able via SPARK_GRAFT_AQE_INITIAL: an
-    # integer sets it, "unset"/"0" leaves Spark's default (= shuffle
-    # partitions); by default it derives from the input size (see
-    # _aqe_initial_partitions — r7's constant 8x cores taxed small
-    # inputs +0.5-1.1 s/query, measured, SCALING.md "wide-AQE A/B").
-    # Strict parse (ADVICE r8): a mistyped value ('none', '-1',
-    # '256 ') must be an ERROR, not a silent fall-through to the
-    # derived heuristic — an A/B arm running the wrong config while
-    # tools/aqe_ab.py labels it by intent would corrupt the experiment.
-    aqe_init = os.environ.get("SPARK_GRAFT_AQE_INITIAL", "")
-    if aqe_init not in ("", "unset", "0") and not aqe_init.isdigit():
-        raise ValueError(
-            f"SPARK_GRAFT_AQE_INITIAL={aqe_init!r}: expected an integer, "
-            "'unset', '0', or empty (derived heuristic)")
-    if aqe_init in ("unset", "0"):
-        pass
-    elif aqe_init.isdigit():
+    # coalesces down), derived from the input size — see
+    # _aqe_initial_partitions; r7's constant 8x cores taxed small inputs
+    # +0.5-1.1 s/query, measured, SCALING.md "wide-AQE A/B".
+    ncpu = int(cpus) if str(cpus).isdigit() else 32
+    derived = _aqe_initial_partitions(
+        sp, ncpu, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    if derived > sp:
         builder = builder.config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            aqe_init)
-    else:
-        ncpu = int(cpus) if str(cpus).isdigit() else 32
-        derived = _aqe_initial_partitions(
-            sp, ncpu, os.environ.get("SPARK_GRAFT_SF_DIR",
-                                     "/root/testdata/sf0.1"))
-        if derived > sp:
-            builder = builder.config(
-                "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(derived))
+            str(derived))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

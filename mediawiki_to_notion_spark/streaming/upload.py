@@ -57,7 +57,7 @@ class UploadConfig:
     # re-verified at p32.  Parallel efficiency vs the pure RTT bound
     # was 0.25–0.29 flat across p in that r10 capture — later
     # attributed to a Nagle/delayed-ACK stall in the MOCK server's
-    # two-write response (fixed in tools/pipeline_bench.py for r11),
+    # two-write response (fixed in r11; tools/measure.py make_server),
     # not to this sink: per-shard overhead above the injected RTT is
     # ~2 ms/request once the server responds in one segment.
     upload_parallelism: int = 1

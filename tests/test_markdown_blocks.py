@@ -88,6 +88,7 @@ def test_store_blocks_plan(spark):
         by_batch.setdefault(r.batch_id, []).append(r.block_index)
     for idxs in by_batch.values():
         assert idxs == list(range(len(idxs)))
+    assert all(r.s3_bucket == "local" for r in b)
 
     assert len(p) == 2
     assert all(r.status == "NEW" and r.page_url is None for r in p.values())

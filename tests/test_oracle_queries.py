@@ -56,3 +56,5 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(ent.oracle_sql()) <= set(ent.queries())
+    # every registered query exactly once, in registration order
+    assert list(ent.queries()) == list(QUERIES)

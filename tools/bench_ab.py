@@ -24,7 +24,7 @@ Env:    BENCH_AB_REF   pin ref (default 4c041cd = the r7 end-of-session
         BENCH_AB_NAMES comma list (default: the r9 drift-watch cluster
                        + unchanged anchors across operator families)
         BENCH_AB_CAPTURES (3) / BENCH_AB_SF_DIR (/root/testdata/sf0.1)
-        SOAK_IDLE_LOAD / SOAK_IDLE_WAIT as in the soak tools
+Starts after the idle gate in tools/measure.py.
 Output: BENCH_AB.json + one JSON line.
 """
 
@@ -35,7 +35,8 @@ import json
 import os
 import subprocess
 import sys
-import time
+
+from measure import wait_idle
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PIN_REF = os.environ.get("BENCH_AB_REF", "4c041cd")
@@ -183,16 +184,7 @@ def main() -> None:
     names = [n for n in os.environ.get(
         "BENCH_AB_NAMES", ",".join(DEFAULT_NAMES)).split(",") if n]
 
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
+    gate = wait_idle()
 
     pin_root = _ensure_worktree(PIN_REF)
     os.makedirs(os.path.join(ROOT, ".bench_ab"), exist_ok=True)
@@ -235,8 +227,7 @@ def main() -> None:
         "head_ref": _git("rev-parse", "HEAD"),
         "sf_dir": SF_DIR,
         "n_captures_per_side": N_CAPTURES,
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        **gate,
         "queries": queries,
         "total_head_min_s": round(sum(v for v in mins["head"].values()), 2),
         "total_pin_min_s": round(sum(v for v in mins["pin"].values()), 2),

@@ -9,10 +9,10 @@ saturate but was unmeasured at volume.  This tool measures it:
   STREAMING_SOAK100) and ingest it ONCE into a template state store;
 - for each parallelism in DRAIN_SOAK_PARALLELISMS (8,16,32): copy the
   template tables, drain the whole corpus in one ``run_upload`` pass
-  against a live local HTTP server with an injected per-request
-  service time (DRAIN_SOAK_LATENCY_MS, default 20 — the r8
-  pipeline-bench methodology: with zero RTT the per-pass fixed costs
-  dominate and parallelism measures nothing);
+  against the local mock API of tools/measure.py with an injected
+  per-request service time (DRAIN_SOAK_LATENCY_MS, default 20 — with
+  zero RTT the per-pass fixed costs dominate and parallelism measures
+  nothing);
 - record measured blocks/s vs the RTT-bound prediction
   n_requests * latency / p, plus the parallel efficiency;
 - at the HIGHEST parallelism re-verify exactly-once equality:
@@ -29,8 +29,9 @@ import os
 import shutil
 import sys
 import tempfile
-import threading
 import time
+
+from measure import make_server, wait_idle
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_PAGES = int(os.environ.get("DRAIN_SOAK_PAGES", "50000"))
@@ -41,9 +42,6 @@ PARALLELISMS = [int(p) for p in os.environ.get(
 
 def main() -> None:
     sys.path.insert(0, ROOT)
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pipeline_bench import _make_server
-
     from pyspark.sql import functions as F
 
     from mediawiki_to_notion_spark.session import get_spark
@@ -56,16 +54,7 @@ def main() -> None:
         run_upload,
     )
 
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
+    gate = wait_idle()
     loadavg = list(os.getloadavg())
 
     spark = get_spark("drain_parallelism_soak")
@@ -76,8 +65,7 @@ def main() -> None:
         "latency_ms": round(LATENCY_S * 1000, 1),
         "parallelisms": PARALLELISMS,
         "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        **gate,
         "rows": [],
     }
     try:
@@ -108,23 +96,19 @@ def main() -> None:
         warm = os.path.join(scratch, "tables_warm")
         warm_staged = staged.limit(200)
         ingest.ingest_batch(spark, warm_staged, warm)
-        srv = _make_server(0.0)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        srv = make_server()
         run_upload(spark, warm, UploadConfig(
-            transport=HttpTransport(base), max_blocks=10_000,
+            transport=HttpTransport(srv.url), max_blocks=10_000,
             upload_parallelism=PARALLELISMS[0]))
         srv.shutdown(); srv.server_close()
 
         for p in PARALLELISMS:
             tables = os.path.join(scratch, f"tables_p{p}")
             shutil.copytree(template, tables)
-            srv = _make_server(LATENCY_S)
-            threading.Thread(target=srv.serve_forever, daemon=True).start()
-            base = f"http://127.0.0.1:{srv.server_address[1]}"
+            srv = make_server(LATENCY_S)
             la = round(os.getloadavg()[0], 2)
             try:
-                cfg = UploadConfig(transport=HttpTransport(base),
+                cfg = UploadConfig(transport=HttpTransport(srv.url),
                                    max_blocks=n_blocks + 1,
                                    upload_parallelism=p)
                 t0 = time.time()

@@ -1,10 +1,20 @@
-"""Regenerate PLANS.md — formatted physical plans for the
+"""Dump formatted physical plans.
+
+With no arguments, regenerate PLANS.md — the plans of the
 scale-sensitive queries, so the plan properties SCALING.md claims
 (pushdown, broadcast, partial aggregation, no cartesian products) can
-be read directly without running Spark.
+be read directly without running Spark.  With arguments, write one
+plan file per query for before/after comparisons of an optimization
+(Exchange counts, join strategies, pushed filters):
 
-Usage:  python tools/dump_plans.py   (writes PLANS.md at the repo root;
-        sf dir via SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.01)
+Usage:  python tools/dump_plans.py
+            writes PLANS.md at the repo root; sf dir via
+            SPARK_GRAFT_SF_DIR, default the sf0.01 test data
+        python tools/dump_plans.py <out_dir> <suffix> <query> [<query> ...]
+            writes <out_dir>/<query>_<suffix>.txt; sf dir via
+            SPARK_GRAFT_SF_DIR, default the bench scale sf0.1, so plan
+            literals (AQE initial partitions, derived plane counts)
+            match what the bench runs
 
 The dump is the ANALYZED-and-OPTIMIZED physical plan as Spark prints it
 (`df.explain("formatted")` equivalent via queryExecution); AQE replans
@@ -156,8 +166,30 @@ SHOWCASE: list[tuple[str, str]] = [
 ]
 
 
-def main() -> None:
-    load_all()
+def _plan(spark, name: str, sf_dir: str) -> str:
+    df = QUERIES[name](spark, sf_dir)
+    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+        df._jdf.queryExecution(), "formatted"
+    ).rstrip("\n")
+
+
+def dump_queries(out_dir: str, suffix: str, names: list[str]) -> None:
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    spark = get_spark("plans")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(f"# {name} — {suffix} (sf dir: {sf_dir})\n\n")
+            f.write(_plan(spark, name, sf_dir) + "\n")
+        print(f"wrote {path}")
+        spark.catalog.clearCache()
+
+
+def dump_showcase() -> None:
     spark = get_spark("plans")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     out = io.StringIO()
@@ -171,18 +203,25 @@ def main() -> None:
         "the plan as Spark prints it.\n"
     )
     for name, check in SHOWCASE:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
         out.write(f"\n## {name}\n\n**Verify:** {check}\n\n")
         out.write("```\n")
-        out.write(plan.rstrip("\n"))
+        out.write(_plan(spark, name, sf_dir))
         out.write("\n```\n")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w") as f:
         f.write(out.getvalue())
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if args and len(args) < 3:
+        raise SystemExit(__doc__)
+    load_all()
+    if args:
+        dump_queries(args[0], args[1], args[2:])
+    else:
+        dump_showcase()
 
 
 if __name__ == "__main__":

@@ -1,8 +1,9 @@
 """Multi-executor soak for the scale-critical dedup families (VERDICT
-r9 brief #3): generalizes tools/multitable_cluster_soak.py — which
-settled the multitable LSH's shuffle-regime question with a
-`local-cluster` data point — to the remaining families whose 100 TB
-claims rest on single-JVM soaks:
+r9 brief #3): the `local-cluster` data point that settled the
+multitable LSH's shuffle-regime question (r8;
+MO_SOAK_QUERIES=dedup_embedding_cosine_lsh_multitable reproduces that
+run) extended to the families whose 100 TB claims rest on single-JVM
+soaks — by default:
 
     dedup_substring_cut, dedup_fuzzy_levenshtein,
     dedup_winnowing_fingerprint, dedup_minhash_lsh,
@@ -13,7 +14,7 @@ Each family runs at the sf10 and sf100 soak corpora on
 trees and block managers) and the tool records wall times, the decade
 exponent, and the per-decade shuffle/spill deltas scraped from the
 status REST API (scoped to this run's applicationId, failed stages
-counted and flagged — see multitable_cluster_soak._stage_totals).
+counted and flagged — see _stage_totals).
 
 Note on dedup_connected_components: the r10 driver cutover collects
 the duplicate-pair edge list when it is under
@@ -25,8 +26,8 @@ propagation loop instead; the artifact records which path ran.
 
 Usage:  python tools/multiop_cluster_soak.py
 Env:    MT_SOAK_EXECUTORS (4) / MT_SOAK_CORES (8) / MT_SOAK_MEM_MB
-        (20480), MO_SOAK_QUERIES (comma list), SOAK_IDLE_LOAD /
-        SOAK_IDLE_WAIT as in the other soaks.
+        (20480), MO_SOAK_QUERIES (comma list).  Starts after the idle
+        gate in tools/measure.py.
 Output: MULTIOP_CLUSTER_SOAK.json + one JSON line.
 """
 
@@ -37,6 +38,9 @@ import math
 import os
 import sys
 import time
+import urllib.request
+
+from measure import wait_idle
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_EXEC = int(os.environ.get("MT_SOAK_EXECUTORS", "4"))
@@ -53,11 +57,37 @@ LBL_A = os.path.basename(SF10.rstrip("/"))
 LBL_B = os.path.basename(SF100.rstrip("/"))
 
 
+def _rest(base: str, path: str):
+    with urllib.request.urlopen(f"{base}{path}", timeout=10) as r:
+        return json.loads(r.read().decode())
+
+
+def _stage_totals(base: str, app_id: str) -> dict:
+    """Aggregate shuffle/spill metrics for THIS application's stages.
+
+    ADVICE r9: the app is addressed by the caller's sc.applicationId
+    (never applications[0], which could be a stale history entry), and
+    failed stages are counted too — their shuffle bytes are real work,
+    and a nonzero ``failed_stages`` in the artifact flags that the
+    deltas include partial attempts."""
+    tot = {"shuffle_write_bytes": 0, "shuffle_read_bytes": 0,
+           "memory_spilled_bytes": 0, "disk_spilled_bytes": 0,
+           "failed_stages": 0}
+    for status in ("complete", "failed"):
+        stages = _rest(
+            base, f"/api/v1/applications/{app_id}/stages?status={status}")
+        for st in stages:
+            tot["shuffle_write_bytes"] += st.get("shuffleWriteBytes", 0)
+            tot["shuffle_read_bytes"] += st.get("shuffleReadBytes", 0)
+            tot["memory_spilled_bytes"] += st.get("memoryBytesSpilled", 0)
+            tot["disk_spilled_bytes"] += st.get("diskBytesSpilled", 0)
+            if status == "failed":
+                tot["failed_stages"] += 1
+    return tot
+
+
 def main() -> None:
     sys.path.insert(0, ROOT)
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from multitable_cluster_soak import _stage_totals
-
     from pyspark.sql import SparkSession
 
     from mediawiki_to_notion_spark.operators import QUERIES, load_all
@@ -65,16 +95,7 @@ def main() -> None:
     names = [n for n in os.environ.get(
         "MO_SOAK_QUERIES", DEFAULT_QUERIES).split(",") if n]
 
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
+    gate = wait_idle()
     loadavg = list(os.getloadavg())
 
     # the larger corpus drives the session's input-size-derived AQE
@@ -151,8 +172,7 @@ def main() -> None:
         "iter_driver_cap": int(os.environ.get(
             "SPARK_GRAFT_ITER_DRIVER_CAP", str(1 << 16))),
         "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        **gate,
         "queries": results,
     }
     with open(os.path.join(ROOT, "MULTIOP_CLUSTER_SOAK.json"), "w") as f:

@@ -24,6 +24,8 @@ import os
 import sys
 import time
 
+from measure import wait_idle
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Defaults measure sf0.1 -> sf1; the r7 heavy-tail decade re-points the
 # pair at sf1 -> sf10 via env (SOAK_SRC/SOAK_DST/SOAK_ONLY/SOAK_OUT).
@@ -105,19 +107,7 @@ def main() -> None:
     extra = ([n for n in only.split(",") if n not in SOAK] if only else [])
     soak += extra
     n_runs = int(os.environ.get("SOAK_RUNS", "3"))
-    # idle gate (r9, VERDICT r8 brief #3: the SOAK100 multitable row was
-    # captured under decaying load 7.4 with the idle number hand-timed —
-    # never again): block until 1-min load < 1.0, same policy as bench.py
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
+    gate = wait_idle()
     loadavg = list(os.getloadavg())
     # the session's input-size-derived AQE width (session.py) must fit
     # the LARGER side of the soak pair — that's where wide initial
@@ -166,9 +156,7 @@ def main() -> None:
                   f"{os.path.basename(SF1)}",
         "n_runs_min_of": n_runs,
         "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_load_threshold": idle_gate_load,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        **gate,
         "queries": rows,
         "max_exponent": max(r["exponent"] for r in rows.values()),
         "median_exponent": sorted(

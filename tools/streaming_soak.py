@@ -2,8 +2,8 @@
 the BATCH library over a real 10x; this measures the chained
 exactly-once STREAMING pipeline (streaming/ingest.py
 start_pipeline_stream — file arrival → block ingest → upload drain
-through the real urllib3 HttpTransport against a live local HTTP
-server) the same way:
+through the real urllib3 HttpTransport against the local mock API of
+tools/measure.py) the same way:
 
 - an N-file and a 10N-file markdown tree (N=STREAM_SOAK_N, default
   500), each drained by one availableNow pass: end-to-end wall time,
@@ -29,9 +29,9 @@ import os
 import shutil
 import sys
 import tempfile
-import threading
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from measure import make_server, wait_idle
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.1"
@@ -46,29 +46,6 @@ SCALES = os.environ.get("STREAM_SOAK_SCALES", "1x,10x").split(",")
 KILL_N = int(os.environ.get("STREAM_SOAK_KILL_N", "50"))
 SOAK_OUT = os.environ.get("STREAM_SOAK_OUT", "STREAMING_SOAK.json")
 _MULT = {"1x": 1, "10x": 10, "100x": 100}
-
-
-class _OkHandler(BaseHTTPRequestHandler):
-    server_version = "notion-soak/0"
-    protocol_version = "HTTP/1.1"  # keep-alive; see pipeline_bench
-
-    def _handle(self) -> None:
-        length = int(self.headers.get("Content-Length", 0))
-        self.rfile.read(length)
-        payload = json.dumps(
-            {"ok": True, "url": f"http://notion.soak{self.path}"}
-        ).encode()
-        self.send_response(200)
-        self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(payload)))
-        self.end_headers()
-        self.wfile.write(payload)
-
-    do_POST = _handle
-    do_PATCH = _handle
-
-    def log_message(self, *args):  # noqa: D102 - quiet
-        pass
 
 
 def _build_tree(dst: str, n_files: int) -> int:
@@ -176,29 +153,15 @@ def main() -> None:
     from mediawiki_to_notion_spark.streaming import ingest
     from mediawiki_to_notion_spark.streaming.upload import UploadConfig
 
-    # idle gate (same policy as bench.py / scaling_soak.py, r9)
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
+    gate = wait_idle()
     loadavg = list(os.getloadavg())
     spark = get_spark("streaming_soak")
     scratch = tempfile.mkdtemp(prefix="streaming_soak_")
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _OkHandler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    srv = make_server()
     out: dict = {
         "metric": "streaming_pipeline_soak",
         "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_load_threshold": idle_gate_load,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        **gate,
         "n_files": N_FILES,
         "scales": SCALES,
         "upload_parallelism": PARALLELISM,
@@ -211,13 +174,13 @@ def main() -> None:
         # warm pass (codegen, Arrow workers, HTTP pools)
         winbox = os.path.join(scratch, "inbox_warm")
         _build_tree(winbox, 20)
-        _run_pass(spark, winbox, scratch, "warm", HttpTransport(base))
+        _run_pass(spark, winbox, scratch, "warm", HttpTransport(srv.url))
 
         for label in SCALES:
             n = N_FILES * _MULT[label]
             inbox = os.path.join(scratch, f"inbox_{label}")
             _build_tree(inbox, n)
-            r = _run_pass(spark, inbox, scratch, label, HttpTransport(base))
+            r = _run_pass(spark, inbox, scratch, label, HttpTransport(srv.url))
             r.pop("tables_dir"), r.pop("ckpt")
             out[label] = r
             print(f"{label}: {json.dumps(r)}", file=sys.stderr, flush=True)
@@ -248,7 +211,7 @@ def main() -> None:
         tables_dir = os.path.join(scratch, "tables_kill")
         ckpt = os.path.join(scratch, "ckpt_kill")
         kill_tr = CrashOnceTransport(
-            base, crash_suffix=":1", flag_path=os.path.join(
+            srv.url, crash_suffix=":1", flag_path=os.path.join(
                 scratch, "crash_flag"))
         cfg = UploadConfig(transport=kill_tr, max_blocks=10_000,
                            upload_parallelism=PARALLELISM)
